@@ -1,14 +1,12 @@
-"""CPU time and resident memory of this process and its descendants,
-read from /proc: this Python process, the JVM it launched, and the JVM's
-Python workers."""
+"""CPU time of this process and its descendants, read from /proc:
+this Python process, the JVM it launched, and the JVM's Python
+workers."""
 
 from __future__ import annotations
 
 import os
-import threading
 
 _TICK = os.sysconf("SC_CLK_TCK")
-_PAGE = os.sysconf("SC_PAGE_SIZE")
 
 
 def _children() -> dict[int, list[int]]:
@@ -49,38 +47,3 @@ def cpu_seconds() -> float:
         total += sum(int(x) for x in fields[11:15])
     return total / _TICK
 
-
-def rss_mb() -> float:
-    total = 0
-    for pid in tree():
-        try:
-            with open(f"/proc/{pid}/statm") as f:
-                total += int(f.read().split()[1])
-        except (OSError, IndexError):
-            continue
-    return total * _PAGE / 2**20
-
-
-class PeakRss:
-    """Samples the tree's resident memory on a background thread while
-    the timed phase runs; ``peak_mb`` is the largest sum seen."""
-
-    def __init__(self, interval_s: float = 0.1):
-        self.interval_s = interval_s
-        self.peak_mb = 0.0
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._run, daemon=True)
-
-    def _run(self) -> None:
-        while not self._stop.is_set():
-            self.peak_mb = max(self.peak_mb, rss_mb())
-            self._stop.wait(self.interval_s)
-
-    def __enter__(self) -> "PeakRss":
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._stop.set()
-        self._thread.join()
-        self.peak_mb = max(self.peak_mb, rss_mb())

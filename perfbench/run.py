@@ -1,6 +1,6 @@
 """Benchmark entry point. Run from the repository root:
 
-    python3 perfbench/run.py --workload medallion --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload medallion --seed 1 --seconds 6 --trace 0
 
 Workloads: ``medallion`` (pipeline refresh + dashboard page),
 ``curation`` (near-dup / clustering / vector pass), ``cdc`` (small
@@ -20,6 +20,7 @@ overhead; then the result object, last.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import shlex
@@ -147,21 +148,28 @@ def report(a, base: str, props: dict, result: dict) -> int:
                                          **result["detail"]}.items()},
         "stamp": {**result["stamp"], "inputs": props},
     }
+    # the untraced figures of the same workload and seed, kept with a
+    # hash of the code that made them so that the tracing overhead
+    # never compares two different programs
     last = os.path.join(base, "last", f"{a.workload}-seed{a.seed}.json")
+    code = _code_hash(os.getcwd())
     if a.trace:
         summary["top_writes"] = result.get("top_writes", [])
+        untraced = {}
         if os.path.exists(last):
             with open(last) as f:
                 untraced = json.load(f)
-            summary["tracing_overhead"] = {
-                k: result["end_to_end"][k][0] - v
-                for k, v in untraced.items()}
+        summary["tracing_overhead"] = (
+            {k: result["end_to_end"][k][0] - v for k, v in untraced["metrics"].items()}
+            if untraced.get("code") == code else
+            "unavailable: no untraced run of this workload and seed with this code")
         metrics = {k: {"value": v, "unit": _unit(k)}
                    for k, v in result["per_layer"].items()}
     else:
         os.makedirs(os.path.dirname(last), exist_ok=True)
         with open(last, "w") as f:
-            json.dump({k: v for k, (v, _u, _n) in result["end_to_end"].items()}, f)
+            json.dump({"code": code, "metrics": {
+                k: v for k, (v, _u, _n) in result["end_to_end"].items()}}, f)
         metrics = {k: {"value": v, "unit": u}
                    for k, (v, u, _n) in result["end_to_end"].items()}
     print(json.dumps(summary))
@@ -172,6 +180,21 @@ def report(a, base: str, props: dict, result: dict) -> int:
         "metrics": metrics,
     }))
     return 0
+
+
+def _code_hash(root: str) -> str:
+    """Hash of the program package and the benchmark sources."""
+    h = hashlib.sha256()
+    for top in (os.path.join(root, PACKAGE), HERE):
+        for d, dirs, files in os.walk(top):
+            dirs.sort()
+            for name in sorted(files):
+                if name.endswith((".py", ".json")):
+                    path = os.path.join(d, name)
+                    h.update(os.path.relpath(path, root).encode() + b"\0")
+                    with open(path, "rb") as f:
+                        h.update(f.read())
+    return h.hexdigest()
 
 
 def _unit(name: str) -> str:

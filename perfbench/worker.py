@@ -2,9 +2,9 @@
 
 Set-up (process start → session → input registration → the
 workload's warm-up, if any), then timed cycles until their summed
-wall time reaches
-``--seconds``, then the output checks, then the result as JSON in
-``--out``. Between cycles, outside the timers, it settles writeback
+wall time reaches ``--seconds`` and their number is a multiple of the
+workload's ``PERIOD``, then the output checks, then the result as JSON
+in ``--out``. Between cycles, outside the timers, it settles writeback
 (``os.sync``) and requests a JVM and a Python GC.
 """
 
@@ -37,6 +37,9 @@ COUNTED_SPANS = (
     "streaming.gold_maintenance.read_rollup",
 )
 PYTHON_LAYERS = ("sources", "plans", "operators", "multimodal", "streaming")
+# work that a cdc run does every third batch: reported as its mean cost
+# per batch, since the median batch does none of it
+PERIODIC = ("sources.deltalog.checkpoint_s", "streaming.gold_maintenance.compact_s")
 
 
 def settle(spark) -> None:
@@ -60,7 +63,7 @@ def layer_metrics(s: spans.Scope) -> dict[str, float]:
     files = s.attr(w, "files")
     m = {
         "sources.catalog.load_s": s.seconds("sources.catalog.load"),
-        "sources.catalog.input_bytes": s.layer_self("", "input_bytes"),
+        "sources.catalog.input_bytes": s.attr("sources.catalog.load", "bytes"),
         "sources.writers.write_s": s.seconds(w),
         "sources.writers.files_written": files,
         "sources.writers.bytes_per_file": s.attr(w, "bytes") / files if files else 0.0,
@@ -165,23 +168,22 @@ def main() -> int:
     stamp["java"] = spark._jvm.System.getProperty("java.version")
 
     cycles, timed = [], 0.0
-    with procstat.PeakRss() as rss:
-        while timed < a.seconds or not cycles:
-            i = len(cycles)
-            t0 = time.perf_counter()
-            try:
-                w.prepare(i)
-                settle(spark)
-                cpu0 = procstat.cpu_seconds()
-                with tracer.span("cycle", str(i)) as span:
-                    rec = w.cycle(i)
-                rec.update(cpu_s=procstat.cpu_seconds() - cpu0, span=span)
-            except Exception:
-                traceback.print_exc()
-                rec = {"ops": list(w.OPS), "error": True,
-                       "wall_s": time.perf_counter() - t0}
-            timed += rec["wall_s"]
-            cycles.append(rec)
+    while timed < a.seconds or not cycles or len(cycles) % w.PERIOD:
+        i = len(cycles)
+        t0 = time.perf_counter()
+        try:
+            w.prepare(i)
+            settle(spark)
+            cpu0 = procstat.cpu_seconds()
+            with tracer.span("cycle", str(i)) as span:
+                rec = w.cycle(i)
+            rec.update(cpu_s=procstat.cpu_seconds() - cpu0, span=span)
+        except Exception:
+            traceback.print_exc()
+            rec = {"ops": list(w.OPS), "error": True,
+                   "wall_s": time.perf_counter() - t0}
+        timed += rec["wall_s"]
+        cycles.append(rec)
     attempted += sum(len(c["ops"]) for c in cycles)
     failed += sum(len(c["ops"]) for c in cycles if c.get("error"))
     try:
@@ -210,9 +212,6 @@ def main() -> int:
         detail["batch_p50_s"] = (_median(b), "s", len(b))
         detail["batch_p90_s"] = (
             statistics.quantiles(b, n=10)[-1] if len(b) > 1 else _median(b), "s", len(b))
-    # not an end-to-end metric: it does not repeat within a tenth
-    # between runs (JVM heap growth follows GC timing)
-    detail["peak_rss_mb"] = (rss.peak_mb, "MB", 1)
     detail["fail_ratio"] = (failed / attempted, "ratio", attempted)
     result = {
         "attempted": attempted, "failed": failed,
@@ -224,7 +223,8 @@ def main() -> int:
         per_cycle = [layer_metrics(spans.Scope(tracer.descendants(c["span"])))
                      for c in ok if c["span"] is not None]
         names = per_cycle[0].keys() if per_cycle else layer_metrics(spans.Scope([])).keys()
-        layers = {n: _median([m[n] for m in per_cycle]) for n in names}
+        layers = {n: (statistics.fmean if n in PERIODIC else _median)(
+            [m[n] for m in per_cycle] or [0.0]) for n in names}
         layers["session.get_spark_s"] = _median([
             s["end"] - s["start"] for s in tracer.spans if s["name"] == "session.get_spark"])
         cands, verified = counts.get("candidate_pairs", 0), counts.get("verified_pairs", 0)

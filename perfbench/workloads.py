@@ -3,11 +3,14 @@ functions of its ``session``, ``sources``, ``plans``, ``operators``,
 ``multimodal`` and ``streaming`` modules, one operation after another
 (a closed loop with one client).
 
-A workload has four phases: ``register`` its inputs, ``warm_up``
-(untimed; only cdc has one: it builds the table, starts the stream and
-runs a few batches), timed ``cycle`` calls, each after an untimed
-``prepare``, and ``check`` of the outputs the cycles kept, run once
-after timing. ``instrument`` installs the traced run's spans.
+A workload has four phases: ``register`` its inputs (curation loads
+its corpus inside each pass instead), ``warm_up`` (untimed: curation
+runs a pass over a sample; cdc builds the table and starts the
+stream; medallion has none, so its timed refresh is the first of
+its process, like a scheduled batch job's), timed ``cycle`` calls, each
+after an untimed ``prepare``, and ``check`` of the outputs the cycles
+kept, run once after timing. ``instrument`` installs the traced run's
+spans.
 """
 
 from __future__ import annotations
@@ -43,7 +46,20 @@ def _sub_once(sql: str, old: str, new: str, count: int = 1) -> str:
     return re.sub(old, new, sql)
 
 
+def _trace_loads(tracer, owner) -> None:
+    """Span ``owner.load_table`` as ``sources.catalog.load``, with the
+    on-disk bytes of the table it loads."""
+
+    def table_bytes(span, _result, _spark, sf_dir, name):
+        span["attrs"]["bytes"] = os.path.getsize(f"{sf_dir}/{name}.parquet")
+
+    tracer.wrap(owner, "load_table", "sources.catalog.load",
+                detail=lambda _s, _d, name: name, after=table_bytes)
+
+
 class Workload:
+    PERIOD = 1  # a run times a whole number of this many cycles
+
     def __init__(self, ctx):
         self.ctx = ctx
         self.spark = None
@@ -58,9 +74,7 @@ class Workload:
         self.spark = spark
 
     def warm_up(self) -> None:
-        """Set-up work after registration; none by default, so the
-        timed cycle is the first of its process, like a scheduled
-        batch job's."""
+        """Set-up work after registration; none by default."""
 
     def prepare(self, i: int) -> None:
         """Untimed work before cycle ``i``."""
@@ -130,8 +144,7 @@ class Medallion(Workload):
             span["attrs"]["files"] = len(files)
             span["attrs"]["bytes"] = sum(os.path.getsize(f) for f in files)
 
-        t.wrap(pipeline, "load_table", "sources.catalog.load",
-               detail=lambda _s, _d, name: name)
+        _trace_loads(t, pipeline)
         t.wrap(pipeline, "write_table", "sources.writers.write",
                detail=lambda _df, path, *a, **kw: rel(path), after=files_written)
         t.wrap(pipeline, "read_table", "sources.writers.read",
@@ -236,18 +249,15 @@ class Curation(Workload):
            "pq_search", "cosine_topk", "phash_dedup")
 
     def register(self, spark) -> None:
-        from ecommerce_lakehouse_platform_spark.sources import catalog
-
         super().register(spark)
-        with self.tracer.span("sources.catalog.load"):
-            self.docs = catalog.load_table(spark, self.ctx.in_dir, "documents")
-            self.emb = catalog.load_table(spark, self.ctx.in_dir, "embeddings")
         self.candidates = []
 
     def instrument(self) -> None:
         from ecommerce_lakehouse_platform_spark.operators import kmeans, neardup
+        from ecommerce_lakehouse_platform_spark.sources import catalog
 
         t = self.tracer
+        _trace_loads(t, catalog)
         t.wrap(kmeans, "kmeans_fit", "operators.kmeans.fit")
 
         verify = neardup._verify_exact_jaccard
@@ -259,23 +269,40 @@ class Curation(Workload):
 
         neardup._verify_exact_jaccard = keep_candidates
 
-    def cycle(self, i: int) -> dict:
+    def warm_up(self) -> None:
+        """One pass over every fifth document and vector: it compiles,
+        loads and starts (Python workers) what the timed pass uses, so
+        that the timed pass does not carry the first pass's cold start,
+        which varies from run to run."""
+        self.cycle(-1, every=5)
+        self.kept.clear()
+        self.candidates.clear()
+
+    def cycle(self, i: int, every: int = 1) -> dict:
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
         from ecommerce_lakehouse_platform_spark.multimodal import binary
         from ecommerce_lakehouse_platform_spark.operators import (
             cluster, kmeans, neardup, similarity)
+        from ecommerce_lakehouse_platform_spark.sources import catalog
 
-        span, docs, emb, out = self.tracer.span, self.docs, self.emb, {}
+        span, out = self.tracer.span, {}
         t0 = time.perf_counter()
+        docs = self.docs = catalog.load_table(self.spark, self.ctx.in_dir, "documents")
+        emb = catalog.load_table(self.spark, self.ctx.in_dir, "embeddings")
+        if every > 1:
+            docs = docs.filter(F.col("doc_id") % every == 0)
+            emb = emb.filter(F.col("vec_id") % every == 0)
         with span("operators.neardup.minhash_lsh"):
             pairs = neardup.minhash_lsh_pairs(docs, num_perm=64, bands=32, threshold=0.5)
             out["minhash_lsh"] = pairs.toPandas()
         with span("operators.cluster.dedup_clusters"):
+            # an explicit schema, since a sample may have no pairs
             out["dedup_clusters"] = cluster.dedup_clusters(
                 docs.select("doc_id"),
-                self.spark.createDataFrame(out["minhash_lsh"][["doc_a", "doc_b"]]),
+                self.spark.createDataFrame(out["minhash_lsh"][["doc_a", "doc_b"]],
+                                           "doc_a long, doc_b long"),
                 "doc_id").toPandas()
         with span("operators.neardup.embedding_pairs"):
             out["embedding_pairs"] = neardup.embedding_neardup_pairs_bucketed(
@@ -371,12 +398,16 @@ class Cdc(Workload):
     BATCH_ROWS = 30  # 0.2 % of the orders
     INSERT_SHARE = 0.2
     RECENT_SCALE = 0.03  # exponential skew toward recent order keys
-    COMPACT_EVERY = 10
-    WARM_BATCHES = 10
+    # The log checkpoint and the rollup compaction both land on every
+    # third batch. A run times whole multiples of two such periods: each
+    # batch position equally often, and six batches at least, since one
+    # batch's cost varies by about 15 % from the next.
+    COMPACT_EVERY = CHECKPOINT_EVERY = 3
+    PERIOD = 2 * COMPACT_EVERY
     KEYS = ["order_date"]
     params = {"batch_rows": BATCH_ROWS, "insert_share": INSERT_SHARE,
               "recent_scale": RECENT_SCALE, "compact_every": COMPACT_EVERY,
-              "log_checkpoint_every": 10, "warm_batches": WARM_BATCHES}
+              "log_checkpoint_every": CHECKPOINT_EVERY}
 
     def register(self, spark) -> None:
         from pyspark.sql import functions as F
@@ -384,8 +415,7 @@ class Cdc(Workload):
         from ecommerce_lakehouse_platform_spark.sources import catalog
 
         super().register(spark)
-        with self.tracer.span("sources.catalog.load"):
-            orders = catalog.load_table(spark, self.ctx.in_dir, "orders")
+        orders = catalog.load_table(spark, self.ctx.in_dir, "orders")
         self.base = orders.select(
             F.col("o_orderkey").alias("order_id"),
             F.col("o_custkey").alias("customer_id"),
@@ -396,8 +426,10 @@ class Cdc(Workload):
         self.schema = self.base.schema
         self.query = None
 
-    def _start(self) -> None:
-        """Fresh table, state and checkpoint; start the stream."""
+    def warm_up(self) -> None:
+        """Fresh table, state and checkpoint; start the stream, which
+        drains the table's first snapshot (and so starts the Python
+        workers the change feed reads with)."""
         from pyspark.sql import functions as F
 
         from ecommerce_lakehouse_platform_spark.sources.deltalog import MiniDeltaTable
@@ -406,7 +438,7 @@ class Cdc(Workload):
         root = f"{self.ctx.run_dir}/cdc"
         shutil.rmtree(root, ignore_errors=True)
         self.path, self.state = f"{root}/orders", f"{root}/rollup"
-        self.table = MiniDeltaTable(self.spark, self.path)
+        self.table = MiniDeltaTable(self.spark, self.path, self.CHECKPOINT_EVERY)
         self.table.write(self.base.repartitionByRange(16, "order_id"))
         snap = self.table.snapshot()
         self.active_files = len(snap.files)
@@ -454,13 +486,6 @@ class Cdc(Workload):
         from ecommerce_lakehouse_platform_spark.sources.deltalog import MiniDeltaTable
 
         self.tracer.wrap(MiniDeltaTable, "checkpoint", "sources.deltalog.checkpoint")
-
-    def warm_up(self) -> None:
-        self._start()
-        for _ in range(self.WARM_BATCHES):
-            self.prepare(-1)
-            self.cycle(-1)
-        self.kept.clear()
 
     def prepare(self, i: int) -> None:
         self.src, self.n_ins = self._batch()
